@@ -199,6 +199,7 @@ def test_http_floor_gate_quarantines_degraded_refresh(tmp_path, monkeypatch):
     overwrite HTTP_BENCH.json."""
     import bench_http as bh
 
+    monkeypatch.setattr(bh, "REPO", tmp_path)  # keep the reject out of the checkout
     stats = {
         "protocol": "t",
         "exact_address": {"avg": 0.05, "p95": 0.1},
@@ -206,10 +207,11 @@ def test_http_floor_gate_quarantines_degraded_refresh(tmp_path, monkeypatch):
     }
     out = tmp_path / "HTTP_BENCH.json"
     out.write_text("{}")
+    reject = tmp_path / ".bench" / "http-bench-rejected.json"
+    assert not reject.exists()
     with pytest.raises(SystemExit, match="floor-gate"):
         bh.write_report(stats, 0.1, out_path=out)
     assert out.read_text() == "{}"  # untouched
-    reject = REPO / ".bench" / "http-bench-rejected.json"
     assert reject.exists()
     assert "quarantined" in json.loads(reject.read_text())["rejected"]
 
@@ -236,9 +238,18 @@ def test_http_floor_gate_passes_healthy_refresh(tmp_path):
 @pytest.fixture()
 def compose_env(tmp_path, monkeypatch):
     """Sandbox bench_common's repo root (attempts logs land in tmp) and
-    pin the fingerprint (an empty glob set hashes deterministically)."""
-    import bench_common as bc
+    pin the fingerprint (an empty glob set hashes deterministically).
 
+    The capture is pinned to the canonical core count
+    (``SPARK_GRAFT_CPUS=CANONICAL_CPUS``): ``write_report`` treats a run at
+    any other count as a scaling probe that never writes HTTP_BENCH.json,
+    so the compose-protocol tests would otherwise depend on the host's
+    core count.  A test that exercises the probe path sets the variable
+    itself."""
+    import bench_common as bc
+    import bench_http as bh
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(bh.CANONICAL_CPUS))
     monkeypatch.setattr(bc, "REPO", tmp_path)
     (tmp_path / ".bench").mkdir()
     return bc, tmp_path

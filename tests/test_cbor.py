@@ -5,6 +5,8 @@ scripts) plus hypothesis roundtrip properties and the Mary-era Value codec
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -15,7 +17,13 @@ VECTORS = "/root/reference/test/vectors"
 
 
 def _vectors(name):
-    with open(f"{VECTORS}/{name}") as f:
+    """The vector rows of ``name``, or one skipped param naming the missing
+    file when kupo's reference checkout is not present."""
+    path = Path(VECTORS) / name
+    if not path.exists():
+        skip = pytest.mark.skip(reason=f"reference vectors not available: {path}")
+        return [pytest.param(None, marks=skip)]
+    with open(path) as f:
         return [line.strip() for line in f if line.strip()]
 
 
